@@ -11,6 +11,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from diive_spark.operators.resample import partial_aggs, rollup_cell
+
 
 def lagged_variants(
     df: DataFrame,
@@ -115,8 +117,9 @@ def resample_calendar_right(
 
     Spark's ``window()`` only does fixed durations, so calendar bins use
     ``date_trunc`` bucketing; the END label is the next period start.
-    Scale: groupBy (key, period) — partial aggregation map-side, the
-    gate's per-key maxcount is a tiny broadcastable window."""
+    The partials, mean and gate are the rollup cell of
+    operators/resample.py.  Scale: groupBy (key, period) — partial
+    aggregation map-side, the gate's per-key maxcount is a tiny window."""
     start = F.date_trunc(unit, F.col(ts_col))
     if unit == "month":
         period_end = F.add_months(start, 1)
@@ -126,40 +129,7 @@ def resample_calendar_right(
         period_end = F.date_add(start.cast("date"), 7).cast("timestamp")
     else:
         raise ValueError(f"unsupported calendar unit: {unit}")
-    agg = df.groupBy(
-        F.col(key_col), period_end.alias("_month_end")
-    ).agg(
-        F.avg(value_col).alias("agg_mean"),
-        F.sum(value_col).alias("agg_sum"),
-        F.count(value_col).alias("n_vals"),
-        F.count("*").alias("n_slots"),
+    agg = df.groupBy(F.col(key_col), period_end.alias("period_end")).agg(
+        *partial_aggs(value_col)
     )
-    wmax = Window.partitionBy(key_col)
-    gated = agg.withColumn("_maxcount", F.max("n_slots").over(wmax)).withColumn(
-        "_mincount",
-        F.when(
-            F.floor(F.col("_maxcount") * mincounts_perc) < 3, F.lit(1)
-        ).otherwise(F.floor(F.col("_maxcount") * mincounts_perc)),
-    )
-    return gated.filter(F.col("n_vals") >= F.col("_mincount")).select(
-        key_col,
-        F.col("_month_end").alias("period_end"),
-        "agg_mean",
-        "agg_sum",
-        F.col("n_vals").cast("long").alias("n_vals"),
-    )
-
-
-def resample_monthly_right(
-    df: DataFrame,
-    key_col: str,
-    ts_col: str,
-    value_col: str,
-    mincounts_perc: float = 0.25,
-) -> DataFrame:
-    """Backward-compatible month-only wrapper of
-    :func:`resample_calendar_right`."""
-    out = resample_calendar_right(
-        df, key_col, ts_col, value_col, unit="month", mincounts_perc=mincounts_perc
-    )
-    return out.withColumnRenamed("period_end", "month_end")
+    return rollup_cell(agg, key_col, "period_end", mincounts_perc)

@@ -194,7 +194,7 @@ class TDigestPartials:
     t-digests as the stored partial, merged by concat + re-compress.
     ``finalize`` emits p50/p95/p99 + count columns."""
 
-    columns = ("td", "pcount")
+    columns = ("td", "n_points")
     supports_gating = False
 
     def __init__(self, delta: float = 100.0,
@@ -213,7 +213,7 @@ class TDigestPartials:
         )
         return [
             _compress_udf(self.delta)(raw).alias("td"),
-            F.count(value_col).cast("long").alias("pcount"),
+            F.count(value_col).cast("long").alias("n_points"),
         ]
 
     def merge_exprs(self):
@@ -221,13 +221,13 @@ class TDigestPartials:
             _compress_udf(self.delta)(
                 F.sort_array(F.flatten(F.collect_list("td")))
             ).alias("td"),
-            F.sum("pcount").cast("long").alias("pcount"),
+            F.sum("n_points").cast("long").alias("n_points"),
         ]
 
     def finalize(self, df: DataFrame) -> DataFrame:
         qv = _quantile_udf(self.qs)(F.col("td")).alias("_qv")
         keep = [c for c in df.columns if c not in self.columns]
-        out = df.select(*keep, F.col("pcount").alias("n_points"), qv)
+        out = df.select(*keep, "n_points", qv)
         return out.select(
             *keep,
             "n_points",

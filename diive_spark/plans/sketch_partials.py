@@ -13,9 +13,10 @@ Determinism contract (what the merged==direct test pins rely on):
 
 * partial state is built from rows sorted by (ts, value) — insertion order
   is defined, so the same batch always yields the same sketch;
-* a merge call canonically orders its input states (by count, then by the
-  serialized state) before folding left, so one merge is a deterministic
-  function of the state multiset;
+* a merge call canonically orders its input states (KLL: by count, flip
+  counter, then serialized levels; FD: by count, then the serialized
+  state) before folding left, so one merge is a deterministic function of
+  the state multiset;
 * the engine's state after a given batch SEQUENCE is therefore bit-equal to
   a direct Python fold of the same per-batch states in the same sequence
   (pinned in tests/test_sketch_tiers.py).  Bit-identity across DIFFERENT
@@ -72,10 +73,11 @@ def _kll_from_cols(k: int, n: int, flips: int, levels) -> KLL:
 
 
 def kll_canonical_fold(k: int, states: list[tuple[int, int, list]]) -> KLL:
-    """Deterministic fold of a state multiset: order by (n, serialized),
-    then merge left-to-right.  Shared by the engine spec and the
-    merged==direct test pin."""
-    sks = sorted(states, key=lambda s: (s[0], json.dumps(s[2])))
+    """Deterministic fold of a state multiset: order by (n, flips,
+    serialized levels), then merge left-to-right.  The flip counter is part
+    of the key because it sets the compaction offsets of every later
+    merge.  Shared by the engine spec and the merged==direct test pin."""
+    sks = sorted(states, key=lambda s: (s[0], s[1], json.dumps(s[2])))
     out = _kll_from_cols(k, *sks[0])
     for st in sks[1:]:
         out = kll_merge(out, _kll_from_cols(k, *st))

@@ -6,12 +6,13 @@ Reference analog: the multi-tier resample family
 resolution) + file-at-a-time merge (filereader.py:215-273). The reference
 recomputes everything per run; this engine is INCREMENTAL:
 
-  * Tier tables store PARTIAL aggregates per (key, window):
-    ``(psum, pcount, pslots)``. Late/new source rows aggregate into deltas
+  * Tier tables store PARTIAL aggregates per (key, window): the
+    ``(psum, pcount, pslots)`` partials of the rollup cell
+    (operators/resample.py).  Late/new source rows aggregate into deltas
     that MERGE by summation — associative and commutative, so any batch
-    order yields identical tables (exactness preserved: mean = psum/pcount
-    recomposed after merge, min-count gate re-evaluated over merged counts
-    at read time, exactly like the reference re-running resample).
+    order yields identical tables; ``read_tier`` recomposes the mean and
+    re-evaluates the min-count gate over merged counts with the same cell,
+    exactly like the reference re-running resample.
   * Storage is a partitioned columnar table (parquet in the sandbox; the
     layout — partition by (tier, window_day) — and the snapshot/lineage
     manifest mirror Iceberg semantics: in production the same operations
@@ -35,19 +36,31 @@ import uuid
 from dataclasses import asdict
 from pathlib import Path
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from diive_spark.config import TierSpec
+from diive_spark.operators.downsample import (
+    M4_STATE,
+    m4_finalize,
+    m4_merge_aggs,
+    m4_partial_aggs,
+)
+from diive_spark.operators.resample import (
+    PARTIALS,
+    merge_aggs,
+    partial_aggs,
+    rollup_cell,
+    window_end_s,
+)
 from diive_spark.operators.sanitize import ts_shift
-
-PARTIALS = ["psum", "pcount", "pslots"]
 
 
 class SumCountPartials:
-    """Default mergeable-aggregate spec: (psum, pcount, pslots) merged by
-    summation — mean/sum/count tiers with the min-count gate re-evaluable
-    at read time (the reference resample semantics).
+    """Default mergeable-aggregate spec: the rollup cell's partials and
+    their merge (operators/resample.py), so mean/sum/count tiers keep the
+    min-count gate re-evaluable at read time (the reference resample
+    semantics).
 
     A spec supplies the tier engine's two aggregate stages (delta partials
     and merge) plus how to present merged rows; everything else — lineage,
@@ -57,61 +70,32 @@ class SumCountPartials:
     machinery.
     """
 
-    columns = tuple(PARTIALS)
+    columns = PARTIALS
     supports_gating = True
 
     def partial_exprs(self, value_col: str, ts_s_col: str):
-        return [
-            F.sum(value_col).alias("psum"),
-            F.count(value_col).alias("pcount"),
-            F.count(F.lit(1)).alias("pslots"),
-        ]
+        return partial_aggs(value_col)
 
     def merge_exprs(self):
-        return [F.sum(c).alias(c) for c in self.columns]
+        return merge_aggs()
 
 
 class M4Partials:
-    """M4 downsample tuples as a tier aggregate: every component is an
-    associative extreme (operators/downsample.py::m4_merge), so partials
-    merge bit-exactly.  Stored as four (a, b) structs + n_in; ``finalize``
-    flattens to the standard M4 row."""
+    """M4 downsample tuples as a tier aggregate: the M4 state of
+    operators/downsample.py, whose components are associative extremes,
+    so partials merge bit-exactly."""
 
-    columns = ("_f", "_l", "_mn", "_mx", "n_in")
+    columns = M4_STATE
     supports_gating = False
 
     def partial_exprs(self, value_col: str, ts_s_col: str):
-        x, y = F.col(ts_s_col), F.col(value_col)
-        return [
-            F.min(F.struct(x.alias("a"), y.alias("b"))).alias("_f"),
-            F.max(F.struct(x.alias("a"), y.alias("b"))).alias("_l"),
-            F.min(F.struct(y.alias("a"), x.alias("b"))).alias("_mn"),
-            F.max(F.struct(y.alias("a"), x.alias("b"))).alias("_mx"),
-            F.count(F.lit(1)).cast("long").alias("n_in"),
-        ]
+        return m4_partial_aggs(F.col(ts_s_col), F.col(value_col))
 
     def merge_exprs(self):
-        return [
-            F.min("_f").alias("_f"),
-            F.max("_l").alias("_l"),
-            F.min("_mn").alias("_mn"),
-            F.max("_mx").alias("_mx"),
-            F.sum("n_in").alias("n_in"),
-        ]
+        return m4_merge_aggs()
 
     def finalize(self, df: DataFrame) -> DataFrame:
-        return df.select(
-            *[c for c in df.columns if c not in self.columns],
-            F.col("_f.a").alias("x_first"),
-            F.col("_f.b").alias("y_first"),
-            F.col("_l.a").alias("x_last"),
-            F.col("_l.b").alias("y_last"),
-            F.col("_mn.b").alias("x_ymin"),
-            F.col("_mn.a").alias("y_min"),
-            F.col("_mx.b").alias("x_ymax"),
-            F.col("_mx.a").alias("y_max"),
-            "n_in",
-        )
+        return m4_finalize(df)
 
 
 class TierStore:
@@ -169,6 +153,37 @@ class TierStore:
         )
 
 
+def _swap_staged_days(
+    store: TierStore, staging: Path, days: list[str], trash_prefix: str
+) -> None:
+    """Swap each fully-staged ``window_day=`` dir into the live table
+    (live -> ``<trash_prefix>_<day>``, staged -> live, trash removed),
+    sweep this swap's orphaned trash, then remove ``staging``.
+
+    Idempotent replay after a crash: a day missing from staging was
+    already swapped — the crash may have landed between the two
+    os.replace calls, leaving that day's trash dir orphaned (ADVICE r2
+    low #3).  The sweep also catches stragglers (e.g. a day later
+    dropped from ``days``) so trash never accumulates across
+    crash-resume cycles."""
+    for day in days:
+        staged_day = staging / f"window_day={day}"
+        trash = store.root / f"{trash_prefix}_{day}"
+        if not staged_day.exists():
+            if trash.exists():
+                shutil.rmtree(trash)
+            continue
+        live_day = store.data_dir / f"window_day={day}"
+        if live_day.exists():
+            os.replace(live_day, trash)
+        os.replace(staged_day, live_day)
+        if trash.exists():
+            shutil.rmtree(trash)
+    for orphan in store.root.glob(f"{trash_prefix}_*"):
+        shutil.rmtree(orphan, ignore_errors=True)
+    shutil.rmtree(staging, ignore_errors=True)
+
+
 class TierEngine:
     """Cascaded incremental rollup into one or more retention tiers."""
 
@@ -209,9 +224,9 @@ class TierEngine:
         ts_eff = F.col(self.ts_col)
         if self.source_freq_seconds:
             ts_eff = ts_shift(ts_eff, -self.source_freq_seconds / 2)
-        us = tier.seconds * 1_000_000
-        wend = (F.floor(F.unix_micros(ts_eff.cast("timestamp")) / us) + 1) * tier.seconds
-        base = df.withColumn("window_end_s", wend.cast("long")).withColumn(
+        base = df.withColumn(
+            "window_end_s", window_end_s(ts_eff, tier.seconds)
+        ).withColumn(
             "_ts_s",
             F.floor(
                 F.unix_micros(F.col(self.ts_col).cast("timestamp"))
@@ -343,31 +358,8 @@ class TierEngine:
                 affected_days = intent["affected_days"]
                 staged_counts = intent["staged_rows"]
                 watermark = intent.get("watermark_s")
-            # swap staged day dirs into the live table (idempotent replay:
-            # a day missing from staging was already swapped)
             store.data_dir.mkdir(parents=True, exist_ok=True)
-            for day in affected_days:
-                staged_day = staging / f"window_day={day}"
-                trash = store.root / f"_trash_{batch_id}_{day}"
-                if not staged_day.exists():
-                    # already swapped on a previous (crashed) attempt — the
-                    # crash may have landed between the two os.replace calls,
-                    # leaving this day's trash dir orphaned (ADVICE r2 low #3)
-                    if trash.exists():
-                        shutil.rmtree(trash)
-                    continue
-                live_day = store.data_dir / f"window_day={day}"
-                if live_day.exists():
-                    os.replace(live_day, trash)
-                os.replace(staged_day, live_day)
-                if trash.exists():
-                    shutil.rmtree(trash)
-            # sweep any stragglers for this batch (e.g. a day later dropped
-            # from affected_days) so trash never accumulates across
-            # crash-resume cycles
-            for orphan in store.root.glob(f"_trash_{batch_id}_*"):
-                shutil.rmtree(orphan, ignore_errors=True)
-            shutil.rmtree(staging, ignore_errors=True)
+            _swap_staged_days(store, staging, affected_days, f"_trash_{batch_id}")
             # commit: fold staged per-day counts into the previous
             # snapshot's partition_rows (untouched partitions not re-read)
             manifest = store.read_manifest()
@@ -400,12 +392,11 @@ class TierEngine:
         return metrics
 
     # -- reads -----------------------------------------------------------------
-    def read_tier(
-        self, name: str, mincounts_perc: float | None = None, gated: bool = True
-    ) -> DataFrame:
+    def read_tier(self, name: str, gated: bool = True) -> DataFrame:
         """Tier as the reference-shaped output: (key, window_end_s, agg_mean,
-        agg_sum, n_vals), min-count gate evaluated over the MERGED counts —
-        identical to running the reference resample over all data at once."""
+        agg_sum, n_vals), min-count gate evaluated over the MERGED counts
+        with the tier's ``mincounts_perc`` — identical to running the
+        reference resample over all data at once."""
         store = self.stores[name]
         df = store.read(self.spark)
         if df is None:
@@ -414,28 +405,11 @@ class TierEngine:
             # custom mergeable aggregates present their own row shape; the
             # min-count gate is a sum/count-tier concept
             return self.partials.finalize(df)
-        perc = mincounts_perc if mincounts_perc is not None else store.tier.mincounts_perc
-        out = df.select(
+        return rollup_cell(
+            df,
             self.key_col,
             "window_end_s",
-            F.when(F.col("pcount") > 0, F.col("psum") / F.col("pcount")).alias("agg_mean"),
-            F.col("psum").alias("agg_sum"),
-            F.col("pcount").alias("n_vals"),
-            "pslots",
-        )
-        if not gated:
-            return out.drop("pslots")
-        w = Window.partitionBy(self.key_col)
-        return (
-            out.withColumn("__maxcount", F.max("pslots").over(w))
-            .withColumn(
-                "__mincount",
-                F.when(F.floor(F.col("__maxcount") * perc) < 3, F.lit(1)).otherwise(
-                    F.floor(F.col("__maxcount") * perc)
-                ),
-            )
-            .filter(F.col("n_vals") >= F.col("__mincount"))
-            .drop("pslots", "__maxcount", "__mincount")
+            store.tier.mincounts_perc if gated else None,
         )
 
     # -- compaction -------------------------------------------------------------
@@ -497,23 +471,12 @@ class TierEngine:
     def _swap_compaction(self, store: TierStore, intent: dict) -> None:
         """Swap a fully-staged compaction into the live table and commit."""
         compact_id, days = intent["compact_id"], intent["days"]
-        staging = store.root / f"_staging_compact_{compact_id}"
-        for day in days:
-            staged_day = staging / f"window_day={day}"
-            trash = store.root / f"_trash_compact_{compact_id}_{day}"
-            if not staged_day.exists():  # already swapped pre-crash
-                if trash.exists():
-                    shutil.rmtree(trash)
-                continue
-            live_day = store.data_dir / f"window_day={day}"
-            if live_day.exists():
-                os.replace(live_day, trash)
-            os.replace(staged_day, live_day)
-            if trash.exists():
-                shutil.rmtree(trash)
-        for orphan in store.root.glob(f"_trash_compact_{compact_id}_*"):
-            shutil.rmtree(orphan, ignore_errors=True)
-        shutil.rmtree(staging, ignore_errors=True)
+        _swap_staged_days(
+            store,
+            store.root / f"_staging_compact_{compact_id}",
+            days,
+            f"_trash_compact_{compact_id}",
+        )
         manifest = store.read_manifest()
         manifest.setdefault("compactions", []).append(
             {"at": time.time(), "compact_id": compact_id, "partitions": days}

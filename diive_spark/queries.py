@@ -25,12 +25,9 @@ from diive_spark.operators import gapfill as GF
 from diive_spark.operators import outliers as OU
 from diive_spark.operators.resample import resample_gated
 from diive_spark.operators.sanitize import dedup_keep_last
+from diive_spark.queries_stats2 import _events
 
 EPS = 1e-9
-
-
-def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/events.parquet")
 
 
 def _documents(spark: SparkSession, sf_dir: str) -> DataFrame:

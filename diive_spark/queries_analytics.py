@@ -14,10 +14,7 @@ from pyspark.sql import functions as F
 
 from diive_spark.operators import analytics as AN
 from diive_spark.operators.analytics import global_ntile, global_ntile_multi
-
-
-def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/events.parquet")
+from diive_spark.queries_stats2 import _events
 
 
 def _lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -19,10 +19,7 @@ from diive_spark.queries_text import (
 )
 from diive_spark.text import dedup as DD
 from diive_spark.text import similarity as SIM
-
-
-def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/events.parquet")
+from diive_spark.queries_stats2 import _events
 
 
 def _lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -20,10 +20,7 @@ from diive_spark.operators.drift import (
     max_drawdown,
     psi,
 )
-
-
-def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/events.parquet")
+from diive_spark.queries_stats2 import _events
 
 
 def _epoch_s(col: str) -> F.Column:

@@ -10,10 +10,7 @@ from pyspark.sql import functions as F
 
 from diive_spark.operators import corrections as CR
 from diive_spark.operators import features as FE
-
-
-def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/events.parquet")
+from diive_spark.queries_stats2 import _events
 
 
 def _es_floor() -> F.Column:
@@ -106,11 +103,13 @@ def q_monthly_resample_right(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _events(spark, sf_dir).select(
         F.col("user_id").cast("long").alias("user_id"), "ts", "value"
     )
-    out = FE.resample_monthly_right(ev, "user_id", "ts", "value", mincounts_perc=0.25)
+    out = FE.resample_calendar_right(
+        ev, "user_id", "ts", "value", unit="month", mincounts_perc=0.25
+    )
     return out.select(
         "user_id",
         F.floor(
-            F.unix_micros(F.col("month_end").cast("timestamp")) / 1_000_000
+            F.unix_micros(F.col("period_end").cast("timestamp")) / 1_000_000
         ).cast("long").alias("month_end_s"),
         (F.floor(F.col("agg_mean") * 10000 + 0.5) / 10000).alias("agg_mean"),
         (F.floor(F.col("agg_sum") * 10000 + 0.5) / 10000).alias("agg_sum"),

@@ -19,12 +19,9 @@ from diive_spark.functions import wind as WIND
 from diive_spark.operators import flags as FL
 from diive_spark.operators import fluxchain as FC
 from diive_spark.operators import outliers as OU
+from diive_spark.queries_stats2 import _events
 
 LAT, LON, UTC_OFF = 47.286417, 7.733750, 1  # reference example site
-
-
-def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/events.parquet")
 
 
 # ---------------------------------------------------------------------------

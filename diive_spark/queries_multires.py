@@ -23,10 +23,7 @@ from diive_spark.operators.croston import croston
 from diive_spark.operators.lombscargle import lomb_scargle
 from diive_spark.operators.multires import haar_energy, hurst_rs
 from diive_spark.text.graph import triangle_count
-
-
-def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/events.parquet")
+from diive_spark.queries_stats2 import _events
 
 
 def _epoch_s(col: str) -> F.Column:

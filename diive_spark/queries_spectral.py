@@ -21,10 +21,7 @@ from diive_spark.operators.esd import shesd_anomalies
 from diive_spark.operators.lttb import minmax_lttb, minmax_preselect
 from diive_spark.operators.matrixprofile import matrix_profile
 from diive_spark.operators.period import detect_period
-
-
-def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/events.parquet")
+from diive_spark.queries_stats2 import _events
 
 
 def _documents(spark: SparkSession, sf_dir: str) -> DataFrame:

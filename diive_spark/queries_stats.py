@@ -22,10 +22,7 @@ from pyspark.sql import functions as F
 from diive_spark.operators.allan import allan_variance
 from diive_spark.operators.burstiness import burstiness_memory
 from diive_spark.text import graph as GR
-
-
-def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/events.parquet")
+from diive_spark.queries_stats2 import _events
 
 
 def _epoch_s(col: str) -> F.Column:

@@ -63,6 +63,10 @@ def _hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return spark.read.parquet(f"{sf_dir}/events.parquet")
+
+
 def _documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/documents.parquet")
 

@@ -15,10 +15,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from diive_spark.operators.asofjoin import asof_join_backward
-
-
-def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/events.parquet")
+from diive_spark.queries_stats2 import _events
 
 
 def _epoch_s(col: str) -> F.Column:

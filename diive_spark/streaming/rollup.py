@@ -6,10 +6,12 @@ the sanitizer (times.py:148-244). The streaming re-expression:
 
   * source: file stream (parquet dirs; Iceberg/Kafka in production),
   * event-time watermark bounds state for late rows,
-  * tumbling ``window(ts, tier)`` per key computes the same PARTIAL
-    aggregates the batch tier engine stores (psum/pcount) — means are
-    recomposed downstream, so streaming output MERGEs into the same tier
-    tables (plans/tiers.py) associatively,
+  * tumbling ``window(ts, tier)`` per key computes the rollup cell's
+    partials (``partial_aggs`` in operators/resample.py), the same ones
+    the batch tier engine stores — means are recomposed downstream by the
+    same cell, so streaming output MERGEs into the same tier tables
+    (plans/tiers.py) associatively.  The window stays ``F.window``
+    because the watermark needs a window on the event-time column,
   * dedup-keep-first within the watermark via ``dropDuplicates`` mirrors
     the batch dedup (times.py:804-821; keep-first vs keep-last is the one
     semantic difference — documented, as true keep-last needs state the
@@ -25,6 +27,8 @@ from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from diive_spark.operators.resample import PARTIALS, partial_aggs
 
 
 def stream_tier_rollup(
@@ -55,18 +59,8 @@ def stream_tier_rollup(
     win = F.window(F.col(ts_col), f"{bucket_seconds} seconds")
     return (
         wm.groupBy(F.col(key_col), win.alias("win"))
-        .agg(
-            F.sum(value_col).alias("psum"),
-            F.count(value_col).alias("pcount"),
-            F.count("*").alias("pslots"),
-        )
-        .select(
-            key_col,
-            F.col("win.end").alias("window_end"),
-            "psum",
-            "pcount",
-            "pslots",
-        )
+        .agg(*partial_aggs(value_col))
+        .select(key_col, F.col("win.end").alias("window_end"), *PARTIALS)
     )
 
 

@@ -6,14 +6,21 @@ The stubs are import-time only: if a stubbed symbol is actually CALLED by
 a code path under test, it raises, so tests cannot silently depend on
 fake behavior. Only pandas/numpy — which are real — execute in the
 reference paths we compare against (resample, z-score, interpolation,
-LocalSD, QCF)."""
+LocalSD, QCF).
+
+Without a checkout at ``REF`` nothing is imported and every loader
+returns None, so differential tests skip.  The reference itself (any
+``diive*`` module) is never stubbed: a stubbed reference would turn a
+missing checkout into failing tests instead of skipped ones."""
 
 from __future__ import annotations
 
+import importlib
 import importlib.machinery
 import re
 import sys
 import types
+from pathlib import Path
 
 REF = "/root/reference"
 
@@ -45,70 +52,104 @@ def _stub(name: str) -> types.ModuleType:
     return m
 
 
-def load_reference():
-    """Returns a namespace of reference functions, or None if the import
-    cannot converge (tests should skip)."""
-    if REF not in sys.path:
-        sys.path.insert(0, REF)
+def reference_present() -> bool:
+    return Path(REF).is_dir()
+
+
+def _is_reference(name: str) -> bool:
+    return name.split(".")[0].startswith("diive")
+
+
+def _with_stubs(load):
+    """Call ``load`` until no third-party import fails, stubbing each
+    missing module or name; None if that does not converge or would need a
+    ``diive*`` module stubbed."""
     for _ in range(200):
         try:
-            from diive.core.funcs.funcs import zscore  # noqa: F401
-            from diive.core.times.resampling import (  # noqa: F401
-                resample_series_to_30MIN,
-            )
-            from diive.pkgs.gapfilling.interpolate import (  # noqa: F401
-                linear_interpolation,
-            )
-            from diive.core.dfun.stats import sstats  # noqa: F401
-            from diive.core.times.times import DetectFrequency  # noqa: F401
-            from diive.pkgs.analyses.correlation import (  # noqa: F401
-                daily_correlation,
-            )
-            from diive.pkgs.analyses.gapfinder import GapFinder  # noqa: F401
-            from diive.pkgs.analyses.histogram import Histogram  # noqa: F401
-            from diive.pkgs.createvar.potentialradiation import potrad  # noqa: F401
-            from diive.pkgs.createvar.vpd import calc_vpd_from_ta_rh  # noqa: F401
-            from diive.pkgs.outlierdetection.absolutelimits import (  # noqa: F401
-                AbsoluteLimits,
-            )
-            from diive.pkgs.outlierdetection.incremental import (  # noqa: F401
-                zScoreIncrements,
-            )
-            from diive.pkgs.outlierdetection.localsd import LocalSD  # noqa: F401
-            from diive.pkgs.qaqc.qcf import FlagQCF  # noqa: F401
-            from diive.pkgs.qaqc import eddyproflags  # noqa: F401
-            from diive.pkgs.flux.uncertainty import (  # noqa: F401
-                RandomUncertaintyPAS20,
-            )
-
-            return types.SimpleNamespace(
-                RandomUncertaintyPAS20=RandomUncertaintyPAS20,
-                eddyproflags=eddyproflags,
-                resample_series_to_30MIN=resample_series_to_30MIN,
-                zscore=zscore,
-                linear_interpolation=linear_interpolation,
-                LocalSD=LocalSD,
-                zScoreIncrements=zScoreIncrements,
-                AbsoluteLimits=AbsoluteLimits,
-                GapFinder=GapFinder,
-                Histogram=Histogram,
-                sstats=sstats,
-                DetectFrequency=DetectFrequency,
-                FlagQCF=FlagQCF,
-                potrad=potrad,
-                calc_vpd_from_ta_rh=calc_vpd_from_ta_rh,
-                daily_correlation=daily_correlation,
-            )
+            return load()
         except ModuleNotFoundError as e:
-            _stub(str(e).split("'")[1])
+            name = str(e).split("'")[1]
+            if _is_reference(name):
+                return None
+            _stub(name)
         except ImportError as e:
             m = re.match(r"cannot import name '(\w+)' from '([\w.]+)'", str(e))
             if not m:
                 return None
             attr, parent = m.groups()
             if parent not in sys.modules:
+                if _is_reference(parent):
+                    return None
                 _stub(parent)
             setattr(sys.modules[parent], attr, _StubAttr(f"{parent}.{attr}"))
         except Exception:
             return None
     return None
+
+
+def import_module(name: str):
+    """One reference module with missing third-party deps stubbed, or None
+    when there is no checkout or the import does not converge."""
+    if load_reference() is None:  # installs REF on sys.path + the base stubs
+        return None
+    return _with_stubs(lambda: importlib.import_module(name))
+
+
+def load_reference():
+    """Returns a namespace of reference functions, or None if there is no
+    checkout or the import cannot converge (tests should skip)."""
+    if not reference_present():
+        return None
+    if REF not in sys.path:
+        sys.path.insert(0, REF)
+    return _with_stubs(_load)
+
+
+def _load():
+    from diive.core.funcs.funcs import zscore  # noqa: F401
+    from diive.core.times.resampling import (  # noqa: F401
+        resample_series_to_30MIN,
+    )
+    from diive.pkgs.gapfilling.interpolate import (  # noqa: F401
+        linear_interpolation,
+    )
+    from diive.core.dfun.stats import sstats  # noqa: F401
+    from diive.core.times.times import DetectFrequency  # noqa: F401
+    from diive.pkgs.analyses.correlation import (  # noqa: F401
+        daily_correlation,
+    )
+    from diive.pkgs.analyses.gapfinder import GapFinder  # noqa: F401
+    from diive.pkgs.analyses.histogram import Histogram  # noqa: F401
+    from diive.pkgs.createvar.potentialradiation import potrad  # noqa: F401
+    from diive.pkgs.createvar.vpd import calc_vpd_from_ta_rh  # noqa: F401
+    from diive.pkgs.outlierdetection.absolutelimits import (  # noqa: F401
+        AbsoluteLimits,
+    )
+    from diive.pkgs.outlierdetection.incremental import (  # noqa: F401
+        zScoreIncrements,
+    )
+    from diive.pkgs.outlierdetection.localsd import LocalSD  # noqa: F401
+    from diive.pkgs.qaqc.qcf import FlagQCF  # noqa: F401
+    from diive.pkgs.qaqc import eddyproflags  # noqa: F401
+    from diive.pkgs.flux.uncertainty import (  # noqa: F401
+        RandomUncertaintyPAS20,
+    )
+
+    return types.SimpleNamespace(
+        RandomUncertaintyPAS20=RandomUncertaintyPAS20,
+        eddyproflags=eddyproflags,
+        resample_series_to_30MIN=resample_series_to_30MIN,
+        zscore=zscore,
+        linear_interpolation=linear_interpolation,
+        LocalSD=LocalSD,
+        zScoreIncrements=zScoreIncrements,
+        AbsoluteLimits=AbsoluteLimits,
+        GapFinder=GapFinder,
+        Histogram=Histogram,
+        sstats=sstats,
+        DetectFrequency=DetectFrequency,
+        FlagQCF=FlagQCF,
+        potrad=potrad,
+        calc_vpd_from_ta_rh=calc_vpd_from_ta_rh,
+        daily_correlation=daily_correlation,
+    )

@@ -21,29 +21,16 @@ from diive_spark.sources.configs import (
 )
 
 def import_ref(name: str):
-    """Import one reference module, stubbing missing third-party deps the
-    same way load_reference does (its stub machinery is reused)."""
-    import importlib
-    import re
-    import sys
-
+    """Import one reference module through the guarded loader of
+    tests/reference_import.py; skips when there is no checkout."""
     from tests import reference_import as ri
 
-    ri.load_reference()  # installs REF on sys.path + the base stubs
-    for _ in range(50):
-        try:
-            return importlib.import_module(name)
-        except ModuleNotFoundError as e:
-            ri._stub(str(e).split("'")[1])
-        except ImportError as e:
-            m = re.match(r"cannot import name '(\w+)' from '([\w.]+)'", str(e))
-            if not m:
-                raise
-            attr, parent = m.groups()
-            if parent not in sys.modules:
-                ri._stub(parent)
-            setattr(sys.modules[parent], attr, ri._StubAttr(f"{parent}.{attr}"))
-    raise RuntimeError(f"could not import {name}")
+    if not ri.reference_present():
+        pytest.skip(f"reference checkout {ri.REF} not found")
+    mod = ri.import_module(name)
+    if mod is None:
+        raise RuntimeError(f"could not import {name}")
+    return mod
 
 
 YAML_TEXT = """\

@@ -58,20 +58,75 @@ def collect_sorted(df):
     return pdf
 
 
-@pytest.mark.parametrize("bucket_seconds,perc", [(1800, 0.9), (3600, 0.25), (86400, 0.9)])
-def test_resample_gated_matches_oracle(spark, series_sdf, series_pdf, bucket_seconds, perc):
+@pytest.fixture(scope="module")
+def pages_series(series_sdf, series_pdf):
+    return series_sdf, series_pdf, 600
+
+
+def _hour(url, hour, values):
+    t0 = pd.Timestamp("2024-01-01") + pd.Timedelta(hours=hour)
+    return [(url, t0 + pd.Timedelta(minutes=5 * i), v) for i, v in enumerate(values)]
+
+
+# Hand-built edge cases of the min-count gate at 3600 s buckets, perc 0.5:
+# * "fallback": maxcount 4, floor(4 * 0.5) = 2 < 3, so mincount falls back
+#   to 1 and a bucket with one value (two null slots) is kept;
+# * "three": maxcount 6, floor(6 * 0.5) == 3; a 3-value bucket is kept, a
+#   2-value bucket (plus one null slot) is dropped;
+# * "allnull": a bucket of 8 null values (n_vals 0, agg_mean null) still
+#   counts its 8 slots, so maxcount 8 gives mincount 4 and a 3-value bucket
+#   is dropped.
+GATE_EDGES = (
+    _hour("fallback", 0, [1.0, 2.0, 3.0, 4.0])
+    + _hour("fallback", 1, [5.0, None, None])
+    + _hour("three", 0, [1.0, 2.0, 3.0, 4.0, 5.0, 6.0])
+    + _hour("three", 1, [7.0, 8.0, 9.0])
+    + _hour("three", 2, [1.5, 2.5, None])
+    + _hour("allnull", 0, [None] * 8)
+    + _hour("allnull", 1, [1.0, 2.0, 3.0, 4.0])
+    + _hour("allnull", 2, [5.0, 6.0, 7.0])
+)
+
+
+@pytest.fixture(scope="module")
+def gate_edges_series(spark):
+    sdf = spark.createDataFrame(
+        [(u, t.to_pydatetime(), v) for u, t, v in GATE_EDGES],
+        "url string, ts timestamp, value double",
+    )
+    pdf = pd.DataFrame(GATE_EDGES, columns=["url", "ts", "value"]).astype(
+        {"value": float}
+    )
+    return sdf, pdf, None
+
+
+@pytest.mark.parametrize(
+    "series,bucket_seconds,perc,salt_buckets",
+    [
+        pytest.param("pages_series", 1800, 0.9, 0, id="1800-0.9"),
+        pytest.param("pages_series", 3600, 0.25, 0, id="3600-0.25"),
+        pytest.param("pages_series", 86400, 0.9, 0, id="86400-0.9"),
+        pytest.param("gate_edges_series", 3600, 0.5, 0, id="gate_edges-unsalted"),
+        pytest.param("gate_edges_series", 3600, 0.5, 4, id="gate_edges-salted"),
+    ],
+)
+def test_resample_gated_matches_oracle(
+    request, series, bucket_seconds, perc, salt_buckets
+):
+    sdf, pdf, source_freq = request.getfixturevalue(series)
     got = collect_sorted(
         resample_gated(
-            series_sdf,
+            sdf,
             key_col="url",
             ts_col="ts",
             value_col="value",
             bucket_seconds=bucket_seconds,
             mincounts_perc=perc,
-            source_freq_seconds=600,
+            source_freq_seconds=source_freq,
+            salt_buckets=salt_buckets,
         )
     )
-    want = oracle_resample_all(series_pdf, bucket_seconds, perc, 600)
+    want = oracle_resample_all(pdf, bucket_seconds, perc, source_freq)
     assert len(got) == len(want), (len(got), len(want))
     assert (got["url"] == want["url"]).all()
     assert (got["window_end"].values == want["window_end"].values).all()

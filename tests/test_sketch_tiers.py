@@ -281,3 +281,15 @@ def test_kll_canonical_fold_is_sequence_deterministic():
     assert (a.n, a._flips, a.levels) == (b.n, b._flips, b.levels)
     # serialized states round-trip through json (what merge_frame relies on)
     assert json.loads(json.dumps(a.levels)) == a.levels
+
+
+def test_kll_canonical_fold_orders_flip_counter_ties():
+    """Two states with equal n and levels but different flip counters must
+    fold the same in either input order: the flip counter sets the
+    compaction offsets of every later merge, so it is part of the order."""
+    small = (1, 0, [[100.0]])
+    even = (8, 0, [[float(v) for v in range(8)]])
+    odd = (8, 1, [[float(v) for v in range(8)]])
+    a = kll_canonical_fold(8, [small, even, odd])
+    b = kll_canonical_fold(8, [small, odd, even])
+    assert (a.n, a._flips, a.levels) == (b.n, b._flips, b.levels)

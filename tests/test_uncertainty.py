@@ -17,6 +17,7 @@ from diive_spark.operators.uncertainty import (
 from tests.reference_import import load_reference
 
 REF = load_reference()
+pytestmark = pytest.mark.skipif(REF is None, reason="reference import failed")
 
 
 def _series(n_days: int = 20, seed: int = 7) -> pd.DataFrame:
